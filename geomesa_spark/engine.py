@@ -108,9 +108,9 @@ class Engine:
         org/apache/spark/sql/SQLRules.scala:204-256, predicate translation
         table :36-141: split conjuncts, translate ``st_*`` calls over literal
         geometries into index scans, leave the rest as residual filters)
-        applied at the predicate layer (PySpark exposes no optimizer-rule
-        extension point, so the rewrite runs before the plan is built — same
-        plans, same effect).
+        applied at the predicate layer, before the plan is built. The JVM
+        Catalyst rule in ``extensions.py`` is the optimizer-side twin for
+        plain ``spark.sql`` / ``df.filter`` queries.
 
         Recognized conjuncts (literal geometry + point columns, either
         order; geometry literals are ``st_geomFromWKT('...')`` or

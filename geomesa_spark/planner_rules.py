@@ -4,10 +4,12 @@ From-scratch analog of the reference's Catalyst extension
 (``org/apache/spark/sql/SQLRules.scala``): its rule walks Filter/Join nodes,
 translates ``st_*`` ScalaUDF calls over literal geometries into GeoTools
 filters pushed into the relation (:216-254, translation table :36-141), and
-leaves untranslatable conjuncts behind as residual Spark filters. PySpark
-exposes no optimizer-rule extension point, so the identical rewrite runs at
-the predicate-string layer before the plan is built — the resulting physical
-plans are the same ones the rule would have produced.
+leaves untranslatable conjuncts behind as residual Spark filters. This
+rewrite runs at the predicate-string layer before the plan is built, behind
+``Engine.where_spatial``. Catalyst's optimizer extension point is used too:
+the JVM rule wired up in ``extensions.py`` (``BBoxPrefilterRule``) injects
+bbox (and, when configured, partition) conjuncts into plain ``spark.sql`` /
+``df.filter`` plans, so the two front ends overlap.
 
 Parser: a tiny top-level call/arg splitter (quote- and paren-aware), not
 regexes — so nested constructors (``st_makeBBOX`` inside ``st_intersects``)

@@ -43,23 +43,28 @@ def get_spark(
         # reader entirely.
         .config("spark.sql.parquet.columnarReaderBatchSize", "1024")
     )
-    # Python workers fork from one daemon process per executor; preload the
-    # numpy/pandas/pyarrow + engine import cascade there so forked workers
-    # inherit it copy-on-write instead of each paying ~0.9 s on its first
-    # task (idle workers are reaped between stages, so a warmup stage
-    # cannot pre-pay this). The daemon module must be importable where the
-    # daemon STARTS — guaranteed here because this factory always builds
-    # local[N] (executor shares the driver cwd/sys.path, checked via
-    # find_spec). A multi-node deployment must ship the package on executor
-    # PYTHONPATH (spark.executorEnv.PYTHONPATH / --archives) before setting
-    # this conf, or leave it unset: see geomesa_spark/worker_daemon.py.
+    # Python workers fork from one daemon process per executor; that daemon
+    # freezes the archives Spark ships (pyspark.zip, py4j, the spark-core
+    # jar) so each task's importlib.invalidate_caches() stops re-reading
+    # them (~0.2-0.25 CPU-s per task), and preloads the numpy/pandas/pyarrow
+    # + engine imports so forked workers inherit them: see
+    # geomesa_spark/worker_daemon.py. The daemon is started by the JVM with
+    # its own environment, so finding the module on the driver's sys.path
+    # is not enough: the package root goes onto the executors' PYTHONPATH
+    # too. A multi-node deployment needs the package at that path on every
+    # executor, or SPARK_GRAFT_NO_DAEMON_PRELOAD=1 for the stock daemon.
     import importlib.util
 
-    if os.environ.get("SPARK_GRAFT_NO_DAEMON_PRELOAD") != "1" and (
-        importlib.util.find_spec("geomesa_spark.worker_daemon") is not None
-    ):
+    extra_conf = dict(extra_conf or {})
+    spec = None
+    if os.environ.get("SPARK_GRAFT_NO_DAEMON_PRELOAD") != "1":
+        spec = importlib.util.find_spec("geomesa_spark.worker_daemon")
+    if spec is not None:
+        root = os.path.dirname(os.path.dirname(os.path.abspath(spec.origin)))
+        key = "spark.executorEnv.PYTHONPATH"
+        extra_conf[key] = os.pathsep.join(p for p in (root, extra_conf.get(key)) if p)
         b = b.config("spark.python.daemon.module", "geomesa_spark.worker_daemon")
-    for k, v in (extra_conf or {}).items():
+    for k, v in extra_conf.items():
         b = b.config(k, v)
     spark = b.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

@@ -103,9 +103,12 @@ def read_pruned(
     part_res: int = DEFAULT_PART_RES,
 ) -> DataFrame:
     """Partition-pruned scan: only directories intersecting the query window
-    are read (verify with ``df.inputFiles()``). Row-level refinement (exact
-    PIP / exact time bounds) stays the caller's job, as in the reference
-    (coarse partitions, fine filters)."""
+    are read. To check pruning, read the scan node's "number of files read"
+    SQL metric after an action (Spark UI or event log); ``df.explain()``
+    shows the ``PartitionFilters``. ``df.inputFiles()`` does not show it: it
+    lists every file of the relation whatever the filter. Row-level
+    refinement (exact PIP / exact time bounds) stays the caller's job, as in
+    the reference (coarse partitions, fine filters)."""
     df = spark.read.parquet(path)
     flt = prune_filters(geom, time_range, part_res)
     return df if flt is None else df.filter(flt)

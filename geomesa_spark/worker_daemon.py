@@ -1,30 +1,61 @@
-"""Python worker daemon that preloads the engine's import cascade.
+"""Python worker daemon that freezes Spark's launch archives and preloads the
+engine's import cascade.
 
 PySpark forks every Python UDF worker from one long-lived daemon process
 per executor (pyspark/daemon.py); forked children inherit the daemon's
-already-imported modules via copy-on-write, so anything imported HERE
-costs each worker nothing. Without it, every fresh worker re-imports
-numpy + pandas + pyarrow + pyspark.sql plus whatever engine module the
-unpickled UDF references (~0.9 s measured in this sandbox) — and idle
-workers are reaped between stages (spark.python.worker.idleTimeoutSeconds),
-so a 32-core local session pays ~30 CPU-seconds of imports again on the
-next Python stage. On a real cluster the preload happens once per
-executor, exactly where a 1000-executor deployment wants it.
+state via copy-on-write, so work done HERE is done once per executor, not
+once per task or per worker.
 
-Wired up by session.get_spark via spark.python.daemon.module — gated on
-find_spec there, which is a valid probe because that factory always builds
-local[N] (the executor shares the driver's cwd/sys.path, so `python -m
-geomesa_spark.worker_daemon` resolves the same way). NOTE: the daemon
+The per-task cost this removes is an archive rescan, not imports. Every
+task starts with ``pyspark.worker_util.setup_spark_files`` calling
+``importlib.invalidate_caches()``, and on Python 3.11 each cached
+``zipimporter`` then re-reads its archive's whole central directory in pure
+Python (``zipimport._read_directory``). A forked worker holds 14-16 of them:
+``pyspark.zip`` once per imported subpackage, ``py4j-*.zip``, and the
+spark-core jar (5,359 entries, no ``.py`` files) that the JVM puts on the
+worker PYTHONPATH. Together that measured 0.2-0.25 CPU-s per task before the
+UDF ran (4-core host, Python 3.11). :func:`_freeze_launch_archives` makes that
+refresh a no-op for the archives on the daemon's launch ``sys.path``: Spark
+ships them with the executor and they do not change while it lives. An
+archive a task adds later (``--py-files``, ``addPyFile``) keeps the base
+refresh. The preload then imports numpy/pandas/pyarrow/pyspark.sql and the
+engine modules once, so forked workers inherit them instead of importing
+them on their first task (idle workers are reaped between stages).
+
+Wired up by session.get_spark via spark.python.daemon.module, which also
+puts this package's root on spark.executorEnv.PYTHONPATH. NOTE: the daemon
 module itself must be importable wherever the daemon process starts — if
 it is not, the daemon fails to launch and every Python stage fails; the
 try/except below only degrades the OPTIONAL preloads (e.g. a stripped
 deployment missing a heavy dependency), it cannot rescue a missing
-package. On a multi-node cluster, ship the package on executor PYTHONPATH
-(spark.executorEnv.PYTHONPATH or --archives) before setting the conf, or
-set SPARK_GRAFT_NO_DAEMON_PRELOAD=1 to leave the stock daemon in place.
+package. On a multi-node cluster the package must exist at the same path
+on every executor (or ship it with --archives and point
+spark.executorEnv.PYTHONPATH at it), or set SPARK_GRAFT_NO_DAEMON_PRELOAD=1
+to leave the stock daemon in place.
 """
 
 from __future__ import annotations
+
+import os
+import sys
+import zipimport
+
+
+def _freeze_launch_archives() -> None:
+    launch = frozenset(p for p in sys.path if os.path.isfile(p))
+
+    class LaunchArchiveImporter(zipimport.zipimporter):
+        def invalidate_caches(self):
+            if self.archive not in launch:
+                super().invalidate_caches()
+
+    sys.path_hooks[:] = [
+        LaunchArchiveImporter if h is zipimport.zipimporter else h for h in sys.path_hooks
+    ]
+    # importers cached while runpy located this module would bypass the hook
+    for path, finder in list(sys.path_importer_cache.items()):
+        if type(finder) is zipimport.zipimporter:
+            del sys.path_importer_cache[path]
 
 
 def _preload() -> None:
@@ -49,6 +80,7 @@ def _preload() -> None:
         pass
 
 
+_freeze_launch_archives()
 _preload()
 
 from pyspark.daemon import manager  # noqa: E402

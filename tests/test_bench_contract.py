@@ -137,6 +137,23 @@ def test_hard_guard_pathological_payload():
     parsed = json.loads(line)
     for key in ("metric", "value", "unit", "queries", "sf"):
         assert key in parsed, key
+    # the absolute fallback still carries the control-units divisor
+    assert parsed["control_sec"] == 99.99
+
+
+def test_control_units_shrink_skips_a_name_too_long_to_fit():
+    """A slow entry whose name alone overflows the room left is skipped;
+    the slow entries after it that do fit are still kept."""
+    long_name = "q_" + "x" * 1200
+    rep = {"metric": "m", "value": 1.0, "unit": "sec", "sf": 0.1,
+           "control_sec": 2.0,
+           "queries": {long_name: 9.0, "slow_a": 5.0, "slow_b": 4.0,
+                       "fast": 0.5}}
+    rep["queries_control_units"] = {k: v / 2 for k, v in rep["queries"].items()}
+    assert len(json.dumps(rep)) > bench.MAX_LINE  # precondition: shrink runs
+    parsed = json.loads(bench.compact_line(rep))
+    assert parsed["queries_control_units"] == {"slow_a": 2.5, "slow_b": 2.0}
+    assert long_name in parsed["queries"]
 
 
 def test_hard_guard_sheds_fastest_first():

@@ -206,3 +206,26 @@ def test_s2_cover_polar_polygon_sound(spark):
             for lv, cs in covmap.items()
         )
         assert hits == 1  # complete AND disjoint
+
+
+def test_cover_cache_overflow_evicts_least_recent(monkeypatch):
+    """An overflowing cover cache drops only its least recently used cover:
+    the covers used since survive, so a working set that fits is not
+    re-descended after one miss too many."""
+    import importlib
+    from collections import OrderedDict
+
+    # the package re-exports a function under the module's name
+    sj = importlib.import_module("geomesa_spark.operators.spatial_join")
+    monkeypatch.setattr(sj, "_COVER_CACHE", OrderedDict())
+    monkeypatch.setattr(sj, "_COVER_CACHE_MAX", 3)
+    boxes = [
+        from_wkt(f"POLYGON(({x} 0, {x + 1} 0, {x + 1} 1, {x} 1, {x} 0))") for x in range(5)
+    ]
+    covers = [sj._cover_cached(g, 8, 64) for g in boxes[:3]]
+    assert sj._cover_cached(boxes[0], 8, 64) is covers[0]  # hit: now most recent
+    sj._cover_cached(boxes[3], 8, 64)  # overflow evicts boxes[1]
+    sj._cover_cached(boxes[4], 8, 64)  # overflow evicts boxes[2]
+    assert len(sj._COVER_CACHE) == 3
+    assert [k[0] for k in sj._COVER_CACHE] == [sj.to_wkb(g) for g in (boxes[0], *boxes[3:])]
+    assert sj._cover_cached(boxes[0], 8, 64) is covers[0]
