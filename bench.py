@@ -384,7 +384,12 @@ def run_span_skew(spark) -> dict:
     Under the old Window.partitionBy(h1,h2) plan the hot arm's key
     materialized on one task; the groupBy partial-aggregate + survivor
     join-back plan must bench ~flat between the two arms (1 warmup +
-    median of SPAN_SKEW_REPS interleaved reps each)."""
+    median of SPAN_SKEW_REPS interleaved reps each).
+
+    Interleaving keeps BOTH arms persisted at once, so the cache holds
+    two corpora (about 2 x 26 MB of text at SPAN_SKEW_DOCS x
+    SPAN_SKEW_DOC_LEN): twice the storage memory of one arm. The default
+    level (MEMORY_AND_DISK) spills what does not fit."""
     import statistics
     import time as _t
 

@@ -44,10 +44,12 @@ class Engine:
 
         return scan_parquet_arrow(self.spark, path, columns=columns)
 
-    def read_pruned(self, path: str, geom=None, time_range=None) -> DataFrame:
+    def read_pruned(self, path: str, geom=None, time_range=None, **kw) -> DataFrame:
+        """``kw`` as for ``sources.storage.read_pruned``: pass the
+        ``part_res`` the store was written with."""
         from .sources.storage import read_pruned
 
-        return read_pruned(self.spark, path, geom=geom, time_range=time_range)
+        return read_pruned(self.spark, path, geom=geom, time_range=time_range, **kw)
 
     def write_partitioned(self, df: DataFrame, path: str, **kw) -> None:
         from .sources.storage import write_partitioned

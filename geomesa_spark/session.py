@@ -11,6 +11,17 @@ import os
 from pyspark.sql import SparkSession
 
 
+def _driver_memory() -> str:
+    """Default ``spark.driver.memory``: half of physical memory, at most 48g.
+    In local mode the driver JVM runs every task; the other half is left to
+    the Python workers and the OS."""
+    try:
+        half_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2 // 2**20
+    except (AttributeError, ValueError, OSError):  # no sysconf (e.g. Windows)
+        return "48g"
+    return f"{min(half_mb, 48 * 1024)}m"
+
+
 def get_spark(
     cpus: int | None = None,
     app: str = "geomesa-spark",
@@ -32,7 +43,7 @@ def get_spark(
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
+        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM") or _driver_memory())
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         # multi-KB binary payloads x 4096-row columnar batches produce G1

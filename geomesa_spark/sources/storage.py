@@ -11,15 +11,22 @@ partition-transform analog) from scratch:
   a ``p_cell`` column holding the Z2 cell at a coarse resolution.
 - ``CompositeScheme``: both, nested (date / cell) — the layout written here.
 
-Spark/parquet prune partition directories from the ``.filter`` on partition
-columns natively (dynamic partition pruning included); ``read_pruned`` builds
-exactly the filters the reference's ``getSimplifiedFilters`` would — date
-range enumeration + cell-prefix IN-list from the polygon cover — so only
-matching directories are listed or read. On Iceberg the same columns become
+``read_pruned`` builds exactly the filters the reference's
+``getSimplifiedFilters`` would — date range enumeration + cell IN-list from
+the polygon cover — and, like the reference, turns them into a partition list
+before reading: on the driver it lists only the store root and the in-range
+``p_date`` dirs, keeps the ``p_cell`` leaves named in the cover, and gives
+Spark just those dirs (``basePath`` = the store), or their ``p_date`` dirs
+when there are more leaves than Spark lists on the driver. So only matching
+directories are listed or read; Spark's partition filter on top then prunes
+exactly as it would on the whole store. On Iceberg the same columns become
 ``days(ts), truncate(cell)`` transforms with identical pruning behavior.
 """
 
 from __future__ import annotations
+
+import datetime as dt
+import re
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
@@ -27,6 +34,7 @@ from ..core import cells
 from ..core.geometry import Geometry, from_wkt
 
 DEFAULT_PART_RES = 6  # 64x64 world grid -> <= 4096 spatial partitions
+DEFAULT_MAX_CELLS = 4096  # cover budget of a query window
 
 
 def with_partition_columns(
@@ -60,30 +68,24 @@ def write_partitioned(
     )
 
 
-def prune_filters(
-    geom: Geometry | str | None = None,
-    time_range: tuple[str, str] | None = None,
-    part_res: int = DEFAULT_PART_RES,
-    max_cells: int = 4096,
-):
-    """Partition-column predicates for a query window (driver-side planning).
+def _cover_cells(geom: Geometry | str, part_res: int, max_cells: int) -> list[int]:
+    """Sorted ``part_res`` cells of the budgeted quadtree cover of ``geom``."""
+    if isinstance(geom, str):
+        geom = from_wkt(geom)
+    cov = cells.cover_geometry(geom, part_res, max_cells=max_cells)
+    out: set[int] = set()
+    for r, c in cov.cells:
+        if r == part_res:
+            out.add(int(c))
+        else:
+            out.update(int(x) for x in cells.children(c, r, part_res))
+    return sorted(out)
 
-    Returns a Column or None. The cell list is the budgeted quadtree cover
-    expanded to ``part_res`` — the exact analog of
-    ``SpatialScheme.getSimplifiedFilters`` enumerating covered directories.
-    """
+
+def _window_filter(cell_list: list[int] | None, time_range):
     conds = []
-    if geom is not None:
-        if isinstance(geom, str):
-            geom = from_wkt(geom)
-        cov = cells.cover_geometry(geom, part_res, max_cells=max_cells)
-        cell_list: list[int] = []
-        for r, c in cov.cells:
-            if r == part_res:
-                cell_list.append(int(c))
-            else:
-                cell_list.extend(int(x) for x in cells.children(c, r, part_res))
-        conds.append(F.col("p_cell").isin(sorted(set(cell_list))))
+    if cell_list is not None:
+        conds.append(F.col("p_cell").isin(cell_list))
     if time_range is not None:
         t0, t1 = time_range
         conds.append(F.col("p_date").between(F.lit(t0), F.lit(t1)))
@@ -95,6 +97,129 @@ def prune_filters(
     return out
 
 
+def prune_filters(
+    geom: Geometry | str | None = None,
+    time_range: tuple[str, str] | None = None,
+    part_res: int = DEFAULT_PART_RES,
+    max_cells: int = DEFAULT_MAX_CELLS,
+):
+    """Partition-column predicates for a query window (driver-side planning).
+
+    Returns a Column or None. The cell list is the budgeted quadtree cover
+    expanded to ``part_res`` — the exact analog of
+    ``SpatialScheme.getSimplifiedFilters`` enumerating covered directories.
+    """
+    cell_list = None if geom is None else _cover_cells(geom, part_res, max_cells)
+    return _window_filter(cell_list, time_range)
+
+
+# Spark's string-to-date cast: "yyyy[-m[-d]]", then anything after " " or "T".
+_DAY = re.compile(r"\s*(\d{4})(?:-(\d{1,2})(?:-(\d{1,2}))?)?(?:[ T].*)?", re.S)
+_GLOB_CHAR = re.compile(r"([{}\[\]*?\\])")
+_NULL_DATE = "p_date=__HIVE_DEFAULT_PARTITION__"
+# Spark's paths-per-listing limit: past it, it lists in a job of one task per path.
+_LISTING_THRESHOLD = "spark.sql.sources.parallelPartitionDiscovery.threshold"
+
+
+def _literal(path: str) -> str:
+    """``path`` escaped for Spark's reader, which globs every path it gets."""
+    return _GLOB_CHAR.sub(r"\\\1", path)
+
+
+def _day_range(time_range) -> tuple[dt.date, dt.date]:
+    """Inclusive day bounds holding every ``p_date`` that ``time_range`` can
+    match. A superset is enough (the partition filter stays on top), so a
+    bound that is not a string Spark's cast parses leaves its side open."""
+
+    def day(v) -> dt.date | None:
+        m = _DAY.fullmatch(v) if isinstance(v, str) else None
+        try:
+            return dt.date(int(m[1]), int(m[2] or 1), int(m[3] or 1)) if m else None
+        except ValueError:
+            return None
+
+    lo, hi = day(time_range[0]), day(time_range[1])
+    return lo or dt.date.min, hi or dt.date.max
+
+
+def _in_days(date_dir: str, days: tuple[dt.date, dt.date]) -> bool:
+    try:
+        d = dt.date.fromisoformat(date_dir[len("p_date="):])
+    except ValueError:  # the null partition, which the date filter drops
+        return False
+    return days[0] <= d <= days[1]
+
+
+def _scan_roots(spark: SparkSession, path: str, cell_list, days) -> list[str]:
+    """The dirs under ``path`` to read for a window, relative to it (none
+    when ``path`` is no directory).
+
+    Lists ``path`` and the ``p_date`` dirs inside ``days`` (all of them when
+    ``days`` is None) on the driver with Hadoop ``FileSystem`` calls, and
+    picks the ``p_date=…/p_cell=…`` leaves whose names match the window
+    (plain string matching, so no glob is built).
+
+    Spark lists up to ``spark.sql.sources.parallelPartitionDiscovery.threshold``
+    (32) paths on the driver, and so each dir found below them; past that it
+    starts a listing job of one task per path, the way it lists a store of
+    more days than that. Building the read of a 59-day store of 435 leaves
+    (4 cores, median of 5) took 0.09 s for 32 leaves, then 0.28 s for 33,
+    0.34 s for 64 and 0.67 s for 162 leaves, against 0.33-0.41 s for the
+    whole store, and 0.08-0.09 s for the 6-21 days holding 33-162 leaves.
+    Hence, once more leaves than that match:
+
+    - up to that many days, each of at most that many cells: the days;
+    - more days than that: the days, in one job of one task per day
+      (listing stops at the first day past the limit), where the whole
+      store starts one per day of the store;
+    - else the leaves, in one job of one task per leaf.
+
+    Spark types ``p_date`` from the dir names it reads, and the null date
+    dir alone types it ``void``. So when no dir picked has a real day, one
+    leaf of a real day is added (the first: the null date dir sorts after
+    every day); the filter on top drops its rows. A window that matches no
+    leaf thus reads that one leaf, which gives it the store's schema."""
+    jvm = spark.sparkContext._jvm
+    Path = jvm.org.apache.hadoop.fs.Path
+    stat2paths = jvm.org.apache.hadoop.fs.FileUtil.stat2Paths
+    as_seq = jvm.scala.Predef.genericWrapArray
+    root = Path(path)
+    fs = root.getFileSystem(spark._jsparkSession.sessionState().newHadoopConf())
+    if not fs.isDirectory(root):
+        return []
+
+    def names(dir_path) -> list[str]:
+        # One py4j round trip per listing (a call per entry costs ~0.1 ms
+        # or more); no file system allows NUL in a path.
+        joined = as_seq(stat2paths(fs.listStatus(dir_path))).mkString("\0")
+        return [p.rsplit("/", 1)[-1] for p in joined.split("\0")] if joined else []
+
+    listed: dict[str, list[str]] = {}
+
+    def cells_of(date_dir: str) -> list[str]:
+        if date_dir not in listed:
+            listed[date_dir] = [n for n in names(Path(root, date_dir)) if n.startswith("p_cell=")]
+        return listed[date_dir]
+
+    dates = sorted(n for n in names(root) if n.startswith("p_date="))
+    in_range = [d for d in dates if days is None or _in_days(d, days)]
+    want = None if cell_list is None else {f"p_cell={c}" for c in cell_list}
+    limit = int(spark.conf.get(_LISTING_THRESHOLD))
+    roots: list[str] = []
+    for d in in_range:
+        roots += [f"{d}/{c}" for c in cells_of(d) if want is None or c in want]
+        if len(roots) > limit and len(in_range) > limit:
+            roots = in_range
+            break
+    else:
+        if len(roots) > limit and all(len(cells_of(d)) <= limit for d in in_range):
+            roots = in_range
+    if all(r.startswith(_NULL_DATE) for r in roots):
+        leaf = next((f"{d}/{c}" for d in dates if d != _NULL_DATE for c in cells_of(d)), None)
+        roots += [leaf] if leaf else []
+    return roots
+
+
 def read_pruned(
     spark: SparkSession,
     path: str,
@@ -103,12 +228,32 @@ def read_pruned(
     part_res: int = DEFAULT_PART_RES,
 ) -> DataFrame:
     """Partition-pruned scan: only directories intersecting the query window
-    are read. To check pruning, read the scan node's "number of files read"
-    SQL metric after an action (Spark UI or event log); ``df.explain()``
-    shows the ``PartitionFilters``. ``df.inputFiles()`` does not show it: it
-    lists every file of the relation whatever the filter. Row-level
-    refinement (exact PIP / exact time bounds) stays the caller's job, as in
-    the reference (coarse partitions, fine filters)."""
-    df = spark.read.parquet(path)
-    flt = prune_filters(geom, time_range, part_res)
-    return df if flt is None else df.filter(flt)
+    are listed and read. The ``part_res`` cover and the day range of the
+    window pick the ``p_date=…/p_cell=…`` leaf dirs on the driver, and Spark
+    reads those dirs alone (``basePath`` = the store), so ``df.inputFiles()``
+    lists only their files: it reflects the pruning. A window matching more
+    leaves than Spark lists on the driver mostly reads its days' ``p_date``
+    dirs instead (see ``_scan_roots``). The partition filter of
+    :func:`prune_filters`, from the same cover, stays on top: the rows and
+    the schema are those of the whole-store read plus that filter, for a
+    store whose files share one schema. Row-level refinement (exact PIP /
+    exact time bounds) stays the caller's job, as in the reference (coarse
+    partitions, fine filters).
+
+    The store is read whole, as ``spark.read.parquet(path)`` reads it, when
+    ``path`` is no directory (a glob pattern, say), when neither the window
+    nor any real day of the store has a leaf, and at ``part_res`` >= 16:
+    cell ids then pass 2**31, and Spark types ``p_cell`` int or bigint from
+    every cell dir of the store. Only the dirs listed under ``path`` are
+    escaped from Spark's globbing."""
+    if geom is None and time_range is None:
+        return spark.read.parquet(path)
+    cell_list = None if geom is None else _cover_cells(geom, part_res, DEFAULT_MAX_CELLS)
+    days = None if time_range is None else _day_range(time_range)
+    roots = _scan_roots(spark, path, cell_list, days) if 4**part_res <= 2**31 else []
+    if roots:
+        base = _literal(path.rstrip("/"))
+        df = spark.read.option("basePath", path).parquet(*(f"{base}/{r}" for r in roots))
+    else:
+        df = spark.read.parquet(path)
+    return df.filter(_window_filter(cell_list, time_range))

@@ -25,6 +25,45 @@ def test_facade_surface(spark):
     assert stats["Count()"].collect()[0].cnt == 2
 
 
+def test_read_pruned_forwards_part_res(spark, tmp_path):
+    """A store written through the facade at part_res=8 reads back through
+    it: the p_cell IN-list must be built at the store's resolution."""
+    import numpy as np
+
+    rng = np.random.default_rng(3)
+    n = 300
+    pdf = pd.DataFrame(
+        {
+            "pid": np.arange(n),
+            "lon": rng.uniform(0, 20, n),
+            "lat": rng.uniform(0, 20, n),
+            "ts": pd.Timestamp("2024-01-01")
+            + pd.to_timedelta(rng.integers(0, 5 * 86400, n), unit="s"),
+        }
+    )
+    eng = Engine(spark)
+    path = str(tmp_path / "store8")
+    eng.write_partitioned(spark.createDataFrame(pdf), path, part_res=8)
+
+    df = eng.read_pruned(
+        path,
+        geom="POLYGON((2 2, 9 2, 9 9, 2 9, 2 2))",
+        time_range=("2024-01-02", "2024-01-04"),
+        part_res=8,
+    )
+    got = {
+        r.pid
+        for r in df.filter("lon BETWEEN 2 AND 9 AND lat BETWEEN 2 AND 9").select("pid").collect()
+    }
+    day = pdf.ts.dt.strftime("%Y-%m-%d")
+    want = set(
+        pdf.pid[
+            pdf.lon.between(2, 9) & pdf.lat.between(2, 9) & day.between("2024-01-02", "2024-01-04")
+        ]
+    )
+    assert got == want and want
+
+
 def test_where_spatial_interception(spark):
     """SQLRules analog: spatial conjuncts over literal geometries rewrite to
     the cell-cover join (no per-row predicate UDF in the plan); residual
